@@ -120,47 +120,25 @@ def cmd_plans(outdir):
     # the ungrouped/grouped scan paths now driver-fold: their final DF is a
     # LocalRelation, so ALSO dump the distributed partials-stage plan the
     # fold consumes (this is where pruning/exchange claims are checkable)
-    from exaloglog_paper_spark.ops.agg import (
-        ExaLogLogSpec,
-        _build_partials_batches,
-        _by_schema_from_fields,
-        token_array_values,
-    )
-    from exaloglog_paper_spark.ops.source import batch_iterator, splits_df
+    from exaloglog_paper_spark.ops.agg import ExaLogLogSpec, sketch_partials, token_array_values
+    from exaloglog_paper_spark.ops.source import list_row_group_splits, split_partials, splits_df
 
     spec = ExaLogLogSpec(2, 20, 10)
     ex = token_array_values("tokens")
+    first = list_row_group_splits(tp)[0][0]
     for label, by in (("ell_global_build_partials", []), ("ell_by_source_partials", ["source"])):
         sdf = splits_df(spark, tp)
-        num_p = sdf.rdd.getNumPartitions()
-        cols = list(dict.fromkeys(by + list(ex.input_cols)))
-
-        def run(batches, _c=tuple(cols), _n=num_p):
-            rows = []
-            for b in batches:
-                for p, g in zip(b.column("path").to_pylist(), b.column("row_group").to_pylist()):
-                    rows.append((p, [g]))
-            yield from _build_partials_batches(
-                batch_iterator(rows, list(_c)), spec, ex, by, num_partitions=_n
-            )
-
-        import pyarrow.parquet as pq
-        from exaloglog_paper_spark.ops.source import list_row_group_splits
-
-        fs = pq.ParquetFile(list_row_group_splits(tp)[0][0]).schema_arrow
-        schema = _by_schema_from_fields([fs.field(c) for c in by])
-        write(label, _explain(sdf.mapInArrow(run, schema=schema)))
+        partials = split_partials(sdf, first, spec, ex, by, sdf.rdd.getNumPartitions())
+        write(label, _explain(partials))
 
     # profiler: partials + distributed fold plan
-    from exaloglog_paper_spark.ops.profile import (
-        fold_partials_df,
-        profile_partials_df,
-    )
-    from exaloglog_paper_spark.ops.specs import CountSketchSpec, KLLSpec, MisraGriesSpec
+    from exaloglog_paper_spark.ops.profile import ProfileSpec, fold_partials_df, profile_values
 
-    specs = (ExaLogLogSpec(2, 20, 10), CountSketchSpec(8192, 5), MisraGriesSpec(256), KLLSpec(200))
-    partials = profile_partials_df(spark.read.parquet(tp), specs)
-    write("token_profile_fold", _explain(fold_partials_df(partials, specs)))
+    df = spark.read.parquet(tp)
+    pspec = ProfileSpec()
+    partials = sketch_partials(df, pspec, profile_values(), by=["source"])
+    folded = fold_partials_df(partials, pspec, num_partials=df.rdd.getNumPartitions())
+    write("token_profile_fold", _explain(folded))
     spark.stop()
 
 
@@ -225,27 +203,15 @@ def cmd_stages():
 
     # profiler split: partials only (collect) vs full fold
     def profile_partials():
-        from exaloglog_paper_spark.ops.agg import ExaLogLogSpec
-        from exaloglog_paper_spark.ops.profile import _make_builder
-        from exaloglog_paper_spark.ops.source import batch_iterator, splits_df
-        from exaloglog_paper_spark.ops.specs import CountSketchSpec, KLLSpec, MisraGriesSpec
+        from exaloglog_paper_spark.ops.profile import ProfileSpec, profile_values
+        from exaloglog_paper_spark.ops.source import list_row_group_splits, split_partials, splits_df
 
-        specs = (ExaLogLogSpec(2, 20, 10), CountSketchSpec(8192, 5), MisraGriesSpec(256), KLLSpec(200))
-        builder = _make_builder(specs, "source", "tokens", "n_tok")
         sdf = splits_df(spark, tp)
-
-        def run(batches):
-            split_rows = []
-            for bt in batches:
-                for prow, grow in zip(bt.column("path").to_pylist(), bt.column("row_group").to_pylist()):
-                    split_rows.append((prow, [grow]))
-            yield from builder(batch_iterator(split_rows, ["source", "tokens", "n_tok"]))
-
-        rows = sdf.mapInArrow(
-            run,
-            schema="g string, ell binary, cs binary, mg binary, kll binary, n_docs long, n_tokens long",
-        ).collect()
-        return len(rows)
+        first = list_row_group_splits(tp)[0][0]
+        partials = split_partials(
+            sdf, first, ProfileSpec(), profile_values(), ["source"], sdf.rdd.getNumPartitions()
+        )
+        return len(partials.collect())
 
     stage("profile_partials_collect", profile_partials)
     print(res)

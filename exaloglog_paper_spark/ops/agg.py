@@ -328,8 +328,8 @@ def flat_list_values(batch, col: str) -> tuple[np.ndarray, np.ndarray]:
     child array through a pathological conversion (~58 ms per batch
     measured for 1.5k offsets!) and is kept only as the fallback for
     exotic layouts. Single definition: token_array_values,
-    token_trigram_values, and ops.profile all call this so the fallback
-    and slicing logic cannot drift."""
+    token_trigram_values, and ops.profile.profile_values all call this so
+    the fallback and slicing logic cannot drift."""
     arr = batch.column(col)
     if hasattr(arr, "combine_chunks"):
         arr = arr.combine_chunks()
@@ -668,10 +668,7 @@ def _merge_level(
     by = list(by)
     gcols = by + ["__bucket"]
     lvl = partials.withColumn("__bucket", bucket_expr)
-    schema = (
-        _by_schema(partials, by)
-        + "sketch binary, n_values long, partition_id long, build_secs double"
-    )
+    schema = _by_schema(partials, by) + PARTIAL_COLS
 
     def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
         st = spec.merge_many(spec.deserialize(bytes(d)) for d in pdf["sketch"])
@@ -740,7 +737,7 @@ def tree_merge(
         seed = local_df(
             partials.sparkSession,
             [(spec.serialize(spec.empty()), 0, 0, 0.0)],
-            "sketch binary, n_values long, partition_id long, build_secs double",
+            PARTIAL_COLS,
         )
         partials = partials.unionByName(seed)
     remaining = num_partials if num_partials is not None else fanin

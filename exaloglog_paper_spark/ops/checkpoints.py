@@ -24,8 +24,8 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .agg import _build_partials_batches, _by_schema_from_fields, tree_merge
-from .source import batch_iterator, list_row_group_splits
+from .agg import tree_merge
+from .source import list_row_group_splits, split_partials, split_table
 
 
 def _bucket_dir(ckpt_dir: str, bucket: int) -> str:
@@ -56,13 +56,9 @@ def checkpointed_sketch_agg(
     checkpointed), then tree-merges all bucket partials. Returns the same
     (byte-identical) result as :func:`ops.source.scan_sketch_agg`.
     """
-    import pyarrow.parquet as pq
-
     splits = list_row_group_splits(path)
-    by = list(by)
-    cols = list(dict.fromkeys(by + list(extractor.input_cols)))
-    file_schema = pq.ParquetFile(splits[0][0]).schema_arrow
-    schema = _by_schema_from_fields([file_schema.field(c) for c in by])
+    if not splits:
+        raise FileNotFoundError(f"no parquet files under {path}")
 
     done = set(completed_buckets(ckpt_dir, num_buckets))
     for b in range(num_buckets):
@@ -74,36 +70,15 @@ def checkpointed_sketch_agg(
             open(os.path.join(_bucket_dir(ckpt_dir, b), "_SUCCESS"), "w").close()
             continue
         par = min(len(bucket_splits), spark.sparkContext.defaultParallelism * 2)
-        sdf = spark.createDataFrame(
-            spark.sparkContext.parallelize(bucket_splits, par),
-            "path string, row_group int",
-        )
-
-        def run(batches, _cols=tuple(cols), _num_p=par):
-            split_rows = []
-            for bt in batches:
-                for prow, grow in zip(
-                    bt.column("path").to_pylist(), bt.column("row_group").to_pylist()
-                ):
-                    split_rows.append((prow, [grow]))
-            yield from _build_partials_batches(
-                batch_iterator(split_rows, list(_cols)),
-                spec,
-                extractor,
-                by,
-                num_partitions=_num_p,
-            )
-
-        partials = sdf.mapInArrow(run, schema=schema).withColumn(
-            "state_sha256", F.sha2(F.col("sketch"), 256)
-        )
+        sdf = split_table(spark, bucket_splits, par)
+        partials = split_partials(sdf, splits[0][0], spec, extractor, by, par)
+        partials = partials.withColumn("state_sha256", F.sha2(F.col("sketch"), 256))
         partials.write.mode("overwrite").parquet(_bucket_dir(ckpt_dir, b))
 
     all_partials = spark.read.parquet(
         *[_bucket_dir(ckpt_dir, b) for b in range(num_buckets)]
     ).drop("state_sha256")
-    total_parts = max(len(splits), 1)
-    return tree_merge(all_partials, spec, by=by, num_partials=total_parts, fanin=fanin)
+    return tree_merge(all_partials, spec, by=by, num_partials=len(splits), fanin=fanin)
 
 
 def lineage_metrics(spark: SparkSession, ckpt_dir: str) -> DataFrame:

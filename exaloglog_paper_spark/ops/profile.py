@@ -10,26 +10,23 @@ every optimizer statistic the engine's sketches can answer:
 - KLL → n_tok quantiles (rank error ≤ eps)
 
 The classical engine shape is one ANALYZE pass per statistic family; here
-a single ``mapInArrow`` partial per partition maintains all four states
-per group simultaneously over the same decoded Arrow batch (tokens are
-flattened and splitmix-hashed once, shared by the ELL and count-sketch
-updates), and the per-partition states are folded DISTRIBUTEDLY
-(``fold_partials_df``: one executor task per group, deterministic merge
-order) so only one KB-state row per group ever reaches the driver.
-
-Scale shape: at 10^12 rows the pass is map-only + one grouped fold
-shuffle of KB states (groups × partitions ≤ ~10^5 states of KB size per
-group-task — the profile's cardinality contract); for larger layouts
-run the individual sketch_agg queries, which tree-merge with bounded
-fan-in.
+the four states ride the engine's single aggregation path as one
+composite sketch (:class:`ProfileSpec`): ``sketch_agg`` /
+``scan_sketch_agg`` / ``checkpointed_sketch_agg`` build one partial per
+(task × group) over the same decoded Arrow batch (tokens are flattened
+and splitmix-hashed once by :class:`profile_values`, shared by the ELL
+and count-sketch updates) and fold them with the bounded-fanin tree
+merge, so only one KB-state row per group ever reaches the driver. NULL
+keys follow the engine rule (NULL is its own group); the profile
+decoding drops that group.
 """
 
 from __future__ import annotations
 
+import struct
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..sketchlib.bitops import splitmix64
@@ -37,13 +34,17 @@ from ..sketchlib.countsketch import CountSketch
 from ..sketchlib.exaloglog import ExaLogLog
 from ..sketchlib.freqitems import MisraGries
 from ..sketchlib.kll import KLL
-from .agg import ExaLogLogSpec
-from .specs import CountSketchSpec, KLLSpec, MisraGriesSpec
-
-_PROFILE_SCHEMA = (
-    "g string, ell binary, cs binary, mg binary, kll binary, "
-    "n_docs long, n_tokens long"
+from .agg import (
+    ExaLogLogSpec,
+    Extractor,
+    SketchSpec,
+    flat_list_values,
+    sketch_agg,
+    tree_merge,
 )
+from .checkpoints import checkpointed_sketch_agg
+from .source import scan_sketch_agg
+from .specs import CountSketchSpec, KLLSpec, MisraGriesSpec
 
 
 @dataclass
@@ -59,159 +60,154 @@ class TokenProfile:
     kll: KLL
 
 
-from .agg import flat_list_values as _flat_tokens  # single definition in agg
+# One 16-byte element per token plus one marker per row, so zero-length
+# rows still reach every group's state. A token carries its raw int64 ``id``
+# and its splitmix64 hash ``h``; a row marker has ``id == ROW_MARKER``
+# (outside the int32 token domain) and its row's ``ntok`` in the bytes of
+# ``h`` (the two fields overlap).
+ROW_MARKER = np.iinfo(np.int64).min
+PROFILE_DTYPE = np.dtype(
+    {
+        "names": ["h", "ntok", "id"],
+        "formats": ["<u8", "<f8", "<i8"],
+        "offsets": [0, 0, 8],
+    }
+)
 
 
-def profile_partials_df(
-    df: DataFrame,
-    specs: tuple,
-    *,
-    by: str = "source",
-    tokens_col: str = "tokens",
-    ntok_col: str = "n_tok",
+class profile_values(Extractor):
+    """The profile's rows as one :data:`PROFILE_DTYPE` array per batch:
+    each row is its marker followed by its tokens, hashed once here for
+    both ELL and the count sketch. The stable group sort keeps every
+    group's token and row order, so the member states match a per-group
+    sequential build."""
+
+    def __init__(self, tokens_col: str = "tokens", ntok_col: str = "n_tok"):
+        self.tokens_col = tokens_col
+        self.ntok_col = ntok_col
+        self.input_cols = (tokens_col, ntok_col)
+
+    def __call__(self, batch):
+        flat, lengths = flat_list_values(batch, self.tokens_col)
+        lengths = lengths + 1
+        markers = np.cumsum(lengths) - lengths
+        tok = np.ones(len(flat) + len(lengths), dtype=bool)
+        tok[markers] = False
+        out = np.empty(len(tok), dtype=PROFILE_DTYPE)
+        out["id"][markers] = ROW_MARKER
+        out["ntok"][markers] = batch.column(self.ntok_col).to_numpy(
+            zero_copy_only=False
+        )
+        out["id"][tok] = flat
+        out["h"][tok] = splitmix64(flat.view(np.uint64))
+        return out, lengths
+
+
+class _Members(list):
+    """The [ell, cs, mg, kll] states; ``key`` keeps their serialized bytes
+    when the state came from ``deserialize`` (the canonical merge key)."""
+
+    key: tuple | None = None
+
+
+class ProfileSpec(SketchSpec):
+    """The profile's composite sketch over :data:`PROFILE_DTYPE` values:
+    ELL and count sketch over the tokens' ``h``, Misra-Gries over their
+    ``id``, KLL over the markers' ``ntok`` (a NULL ``n_tok`` is NaN,
+    which KLL skips). Misra-Gries counts every token, so ``mg.n`` is the
+    token count and ``n_values - mg.n`` the row count.
+
+    Serialized form: four little-endian uint32 member lengths, then the
+    member states in that order."""
+
+    name = "profile"
+
+    def __init__(
+        self, t=2, d=20, p=10, cs_width=8192, cs_depth=5, mg_k=256, kll_k=200
+    ):
+        self.members = (
+            ExaLogLogSpec(t, d, p),
+            CountSketchSpec(cs_width, cs_depth),
+            MisraGriesSpec(mg_k),
+            KLLSpec(kll_k),
+        )
+
+    def empty(self):
+        return _Members(m.empty() for m in self.members)
+
+    def add(self, state, values):
+        ell, cs, mg, kll = self.members
+        ids = values["id"]
+        doc = ids == ROW_MARKER
+        tok = ~doc
+        h = values["h"][tok]
+        return _Members(
+            (
+                ell.add(state[0], h),
+                cs.add(state[1], h),
+                mg.add(state[2], ids[tok]),
+                kll.add(state[3], values["ntok"][doc]),
+            )
+        )
+
+    def merge(self, a, b):
+        return self.merge_many([a, b])
+
+    def merge_many(self, states):
+        """Fold in canonical order: MG and KLL retain merge-order-dependent
+        sets, so partials are sorted on their member bytes first — the
+        same partial set merges the same way whatever order the shuffle
+        delivers it in (resumes and reruns stay byte-identical)."""
+        states = sorted(
+            states,
+            key=lambda s: s.key
+            if s.key is not None
+            else tuple(m.serialize(x) for m, x in zip(self.members, s)),
+        )
+        return _Members(
+            m.merge_many([s[i] for s in states])
+            for i, m in enumerate(self.members)
+        )
+
+    def serialize(self, state) -> bytes:
+        parts = [m.serialize(x) for m, x in zip(self.members, state)]
+        return struct.pack("<4I", *map(len, parts)) + b"".join(parts)
+
+    def deserialize(self, data):
+        data = bytes(data)
+        parts, off = [], 16
+        for n in struct.unpack_from("<4I", data):
+            parts.append(data[off : off + n])
+            off += n
+        state = _Members(m.deserialize(b) for m, b in zip(self.members, parts))
+        state.key = tuple(parts)
+        return state
+
+    def finalize(self, state) -> float:
+        return self.members[0].finalize(state[0])
+
+
+def fold_partials_df(
+    partials: DataFrame, spec: ProfileSpec, num_partials: int | None = None
 ) -> DataFrame:
-    """The profiler's distributed stage as a DataFrame (one row per
-    (partition, group) with all four serialized states) — exposed so plan
-    properties (column pruning) are pinnable on the REAL plan and so
-    callers can sink partials instead of folding them."""
-    build = _make_builder(specs, by, tokens_col, ntok_col)
-    from pyspark.sql import functions as F
-
-    return (
-        df.select(by, tokens_col, ntok_col)
-        # NULL group keys would poison np.unique's object-array sort; a
-        # profile of the NULL group is meaningless anyway — drop explicitly
-        # (the builder also drops them, for the pyarrow-scan path)
-        .filter(F.col(by).isNotNull())
-        .mapInArrow(build, schema=_PROFILE_SCHEMA)
-    )
+    """Tree-merge per-``source`` ``ProfileSpec`` partials
+    (``sketch_partials(..., by=["source"])``) to one row per source. The
+    profile entry points reach ``tree_merge`` through the agg entry
+    points; this name stays for the fold-plan tests, ``bench_extra.py``
+    and the benchmark tracer's span."""
+    return tree_merge(partials, spec, by=["source"], num_partials=num_partials)
 
 
-def _make_builder(specs, by: str, tokens_col: str, ntok_col: str):
-    """The profiler's per-task generator: an iterator of Arrow record
-    batches in, ONE summary batch of per-group serialized states out.
-    Shared by the Spark mapInArrow path and the pyarrow row-group-scan
-    path (checkpointed_profile)."""
-    ell_spec, cs_spec, mg_spec, kll_spec = specs
-
-    def build(batches):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        states: dict[str, list] = {}  # g -> [ell, cs, mg, kll, docs, toks]
-        for b in batches:
-            if b.column(by).null_count:
-                b = b.filter(pc.is_valid(b.column(by)))
-            if b.num_rows == 0:
-                continue
-            flat, lengths = _flat_tokens(b, tokens_col)
-            src = b.column(by).to_numpy(zero_copy_only=False)
-            ntok = b.column(ntok_col).to_numpy(zero_copy_only=False)
-            # group membership of every flattened token in one repeat
-            codes, inv = np.unique(src, return_inverse=True)
-            flat_inv = np.repeat(inv, lengths)
-            hashed = splitmix64(flat.view(np.uint64))
-            # group dispatch by STABLE sort, not per-group masks: masks are
-            # O(groups * n) per batch — quadratic-ish for high-cardinality
-            # ``by`` — while two sorts give contiguous per-group segments
-            # in O(n log n). Stable sort preserves each group's original
-            # token order, so every state (incl. the order-dependent
-            # MG/KLL) is byte-identical to the mask formulation.
-            row_order = np.argsort(inv, kind="stable")
-            tok_order = np.argsort(flat_inv, kind="stable")
-            row_ends = np.cumsum(np.bincount(inv, minlength=len(codes)))
-            tok_ends = np.cumsum(np.bincount(flat_inv, minlength=len(codes)))
-            ntok_sorted = ntok[row_order].astype(np.float64)
-            flat_sorted = flat[tok_order]
-            hashed_sorted = hashed[tok_order]
-            r_lo = t_lo = 0
-            for gi, g in enumerate(codes):
-                r_hi, t_hi = int(row_ends[gi]), int(tok_ends[gi])
-                st = states.get(g)
-                if st is None:
-                    st = states[g] = [
-                        ell_spec.empty(), cs_spec.empty(),
-                        mg_spec.empty(), kll_spec.empty(), 0, 0,
-                    ]
-                h = hashed_sorted[t_lo:t_hi]
-                # hash once, share: ELL and count-sketch both take the
-                # splitmix64 stream; MG wants raw ids for identifiability
-                st[0] = ell_spec.add(st[0], h)
-                st[1] = cs_spec.add(st[1], h)
-                st[2] = mg_spec.add(st[2], flat_sorted[t_lo:t_hi])
-                st[3] = kll_spec.add(st[3], ntok_sorted[r_lo:r_hi])
-                st[4] += r_hi - r_lo
-                st[5] += t_hi - t_lo
-                r_lo, t_lo = r_hi, t_hi
-        cols = {
-            "g": pa.array([str(g) for g in states], pa.string()),
-            "ell": pa.array(
-                [ell_spec.serialize(s[0]) for s in states.values()], pa.binary()
-            ),
-            "cs": pa.array(
-                [cs_spec.serialize(s[1]) for s in states.values()], pa.binary()
-            ),
-            "mg": pa.array(
-                [mg_spec.serialize(s[2]) for s in states.values()], pa.binary()
-            ),
-            "kll": pa.array(
-                [kll_spec.serialize(s[3]) for s in states.values()], pa.binary()
-            ),
-            "n_docs": pa.array([s[4] for s in states.values()], pa.int64()),
-            "n_tokens": pa.array([s[5] for s in states.values()], pa.int64()),
-        }
-        yield pa.record_batch(cols)
-
-    return build
-
-
-def fold_partials_df(partials: DataFrame, specs) -> DataFrame:
-    """DISTRIBUTED fold of profile partial rows: one executor task per
-    group merges that group's (partition × group) states, so only the
-    folded per-group rows (KB each) ever reach the driver — the former
-    collect shipped every partial (tasks × groups × ~320 KB of
-    count-sketch state ≈ 100 MB at sf0.1) through the driver and folded
-    it there sequentially, the engine's only non-distributed merge.
-
-    Byte-identical to the driver fold: each task sorts its group's rows
-    on the same full deterministic state key `_fold_profiles` uses, so
-    the merge-order-dependent MG/KLL summaries come out exactly the
-    same; ELL/CS merges are order-free by algebra. Groups fold in
-    parallel; the per-task input is that group's partial set (the
-    profile's documented ≤ ~10^5 KB-state contract, now per executor
-    task instead of on the driver)."""
-    ell_spec, cs_spec, mg_spec, kll_spec = specs
-
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        cols = {c: [bytes(v) for v in pdf[c]] for c in ("ell", "cs", "mg", "kll")}
-        order = sorted(
-            range(len(pdf)),
-            key=lambda i: (
-                cols["ell"][i], cols["cs"][i], cols["mg"][i], cols["kll"][i]
-            ),
-        )
-        merged = {
-            c: spec.serialize(
-                spec.merge_many(spec.deserialize(cols[c][i]) for i in order)
-            )
-            for c, spec in (
-                ("ell", ell_spec), ("cs", cs_spec),
-                ("mg", mg_spec), ("kll", kll_spec),
-            )
-        }
-        return pd.DataFrame(
-            {
-                "g": [pdf["g"].iloc[0]],
-                "ell": [merged["ell"]],
-                "cs": [merged["cs"]],
-                "mg": [merged["mg"]],
-                "kll": [merged["kll"]],
-                "n_docs": [int(pdf["n_docs"].sum())],
-                "n_tokens": [int(pdf["n_tokens"].sum())],
-            }
-        )
-
-    return partials.groupBy("g").applyInPandas(fold, schema=_PROFILE_SCHEMA)
+def _profiles(rows, spec: ProfileSpec, by: str) -> dict[str, TokenProfile]:
+    """Decode merged rows into TokenProfiles (the NULL group is dropped)."""
+    out: dict[str, TokenProfile] = {}
+    for r in rows:
+        if r[by] is None:
+            continue
+        ell, cs, mg, kll = spec.deserialize(r["sketch"])
+        g = str(r[by])
+        out[g] = TokenProfile(g, r["n_values"] - mg.n, mg.n, ell, cs, mg, kll)
+    return out
 
 
 def profile_token_table(
@@ -229,52 +225,9 @@ def profile_token_table(
     kll_k: int = 200,
 ) -> dict[str, TokenProfile]:
     """One scan of ``df`` → per-``by``-group TokenProfile."""
-    ell_spec = ExaLogLogSpec(t, d, p)
-    cs_spec = CountSketchSpec(cs_width, cs_depth)
-    mg_spec = MisraGriesSpec(mg_k)
-    kll_spec = KLLSpec(kll_k)
-    specs = (ell_spec, cs_spec, mg_spec, kll_spec)
-    rows = fold_partials_df(
-        profile_partials_df(
-            df, specs, by=by, tokens_col=tokens_col, ntok_col=ntok_col
-        ),
-        specs,
-    ).collect()
-
-    return _fold_profiles(rows, specs)
-
-
-def _fold_profiles(rows, specs) -> dict[str, TokenProfile]:
-    """Driver fold of partial rows into per-group TokenProfiles.
-
-    Rows are sorted on a full deterministic key before folding so the
-    merged MG/KLL states (whose retained SETS depend on merge order) are
-    identical across reruns, resumes, and collect orderings; the
-    register/linear states are order-free anyway."""
-    ell_spec, cs_spec, mg_spec, kll_spec = specs
-    rows = sorted(
-        rows,
-        key=lambda r: (r.g, bytes(r.ell), bytes(r.cs), bytes(r.mg), bytes(r.kll)),
-    )
-    out: dict[str, TokenProfile] = {}
-    grouped: dict[str, list] = {}
-    for r in rows:
-        grouped.setdefault(r.g, []).append(r)
-    for g, rs in grouped.items():
-        out[g] = TokenProfile(
-            group=g,
-            n_docs=sum(r.n_docs for r in rs),
-            n_tokens=sum(r.n_tokens for r in rs),
-            ell=ell_spec.merge_many(
-                [ell_spec.deserialize(bytes(r.ell)) for r in rs]
-            ),
-            cs=cs_spec.merge_many([cs_spec.deserialize(bytes(r.cs)) for r in rs]),
-            mg=mg_spec.merge_many([mg_spec.deserialize(bytes(r.mg)) for r in rs]),
-            kll=kll_spec.merge_many(
-                [kll_spec.deserialize(bytes(r.kll)) for r in rs]
-            ),
-        )
-    return out
+    spec = ProfileSpec(t, d, p, cs_width, cs_depth, mg_k, kll_k)
+    ex = profile_values(tokens_col, ntok_col)
+    return _profiles(sketch_agg(df, spec, ex, by=[by]).collect(), spec, by)
 
 
 def checkpointed_profile(
@@ -294,80 +247,19 @@ def checkpointed_profile(
     kll_k: int = 200,
     num_buckets: int = 8,
 ) -> dict[str, TokenProfile]:
-    """Resumable one-pass ANALYZE over a parquet token table, riding the
-    same bucket-granular checkpoint design as
-    ``ops.checkpoints.checkpointed_sketch_agg``: row-group splits are
-    bucketed deterministically (``split_index % num_buckets``), each
-    completed bucket writes its per-(task, group) profile partials —
-    all four serialized states + sha256 digests per state — to
-    ``<ckpt_dir>/bucket=<i>/`` under a ``_SUCCESS`` marker, and a rerun
-    recomputes ONLY missing buckets. The final driver fold sorts partials
-    on a full deterministic key, so the resumed result is byte-identical
-    to an uninterrupted run for every state, including the merge-order-
-    dependent MG/KLL summaries. ``ops.checkpoints.lineage_metrics`` reads
-    the bucket dirs directly as the lineage/metrics table."""
-    import os
-
-    import pyarrow as pa
-    from pyspark.sql import functions as F
-
-    from .checkpoints import _bucket_dir, completed_buckets
-    from .source import batch_iterator, list_row_group_splits
-
-    specs = (
-        ExaLogLogSpec(t, d, p),
-        CountSketchSpec(cs_width, cs_depth),
-        MisraGriesSpec(mg_k),
-        KLLSpec(kll_k),
+    """Resumable one-pass ANALYZE over a parquet token table:
+    ``profile_token_table`` through ``checkpointed_sketch_agg``, so a
+    rerun recomputes ONLY missing buckets and the canonical merge order
+    makes the resumed result byte-identical to an uninterrupted run for
+    every state, including the merge-order-dependent MG/KLL summaries.
+    ``ops.checkpoints.lineage_metrics`` reads the bucket dirs directly as
+    the lineage/metrics table."""
+    spec = ProfileSpec(t, d, p, cs_width, cs_depth, mg_k, kll_k)
+    ex = profile_values(tokens_col, ntok_col)
+    df = checkpointed_sketch_agg(
+        spark, path, spec, ex, ckpt_dir, by=[by], num_buckets=num_buckets
     )
-    builder = _make_builder(specs, by, tokens_col, ntok_col)
-    splits = list_row_group_splits(path)
-    if not splits:
-        # match scan_profile/splits_df's contract: the engine-standard
-        # informative error, not a downstream 'Unable to infer schema'
-        # from reading 8 marker-only bucket dirs
-        raise FileNotFoundError(f"no parquet files under {path}")
-    cols = [by, tokens_col, ntok_col]
-
-    done = set(completed_buckets(ckpt_dir, num_buckets))
-    for b in range(num_buckets):
-        if b in done:
-            continue
-        bucket_splits = [s for i, s in enumerate(splits) if i % num_buckets == b]
-        if not bucket_splits:
-            os.makedirs(_bucket_dir(ckpt_dir, b), exist_ok=True)
-            open(os.path.join(_bucket_dir(ckpt_dir, b), "_SUCCESS"), "w").close()
-            continue
-        par = min(len(bucket_splits), spark.sparkContext.defaultParallelism * 2)
-        sdf = spark.createDataFrame(
-            pd.DataFrame(bucket_splits, columns=["path", "row_group"]),
-            "path string, row_group int",
-        ).repartition(par)
-
-        def run(batches, _cols=tuple(cols)):
-            split_rows = []
-            for bt in batches:
-                for prow, grow in zip(
-                    bt.column("path").to_pylist(),
-                    bt.column("row_group").to_pylist(),
-                ):
-                    split_rows.append((prow, [grow]))
-            yield from builder(batch_iterator(split_rows, list(_cols)))
-
-        partials = sdf.mapInArrow(run, schema=_PROFILE_SCHEMA)
-        for col in ("ell", "cs", "mg", "kll"):
-            partials = partials.withColumn(
-                f"{col}_sha256", F.sha2(F.col(col), 256)
-            )
-        partials.write.mode("overwrite").parquet(_bucket_dir(ckpt_dir, b))
-
-    rows = fold_partials_df(
-        spark.read.option("basePath", ckpt_dir)
-        .parquet(ckpt_dir + "/bucket=*")
-        .select("g", "ell", "cs", "mg", "kll", "n_docs", "n_tokens"),
-        specs,
-    ).collect()
-    return _fold_profiles(rows, specs)
+    return _profiles(df.collect(), spec, by)
 
 
 def scan_profile(
@@ -386,34 +278,11 @@ def scan_profile(
     kll_k: int = 200,
 ) -> dict[str, TokenProfile]:
     """``profile_token_table`` over the pyarrow-native row-group scan
-    (ops/source.splits_df + batch_iterator) — bypasses the JVM→Arrow
-    bridge for the ``array<int32>`` column exactly like
-    ``scan_sketch_agg`` does for single-sketch builds. Same result
-    contract: register/linear states byte-identical to the Spark-scan
-    build; MG/KLL guarantee-level (their retained sets are
-    partitioning-dependent)."""
-    from .source import batch_iterator, splits_df
-
-    specs = (
-        ExaLogLogSpec(t, d, p),
-        CountSketchSpec(cs_width, cs_depth),
-        MisraGriesSpec(mg_k),
-        KLLSpec(kll_k),
-    )
-    builder = _make_builder(specs, by, tokens_col, ntok_col)
-    cols = [by, tokens_col, ntok_col]
-    sdf = splits_df(spark, path)
-
-    def run(batches):
-        split_rows = []
-        for bt in batches:
-            for prow, grow in zip(
-                bt.column("path").to_pylist(), bt.column("row_group").to_pylist()
-            ):
-                split_rows.append((prow, [grow]))
-        yield from builder(batch_iterator(split_rows, cols))
-
-    rows = fold_partials_df(
-        sdf.mapInArrow(run, schema=_PROFILE_SCHEMA), specs
-    ).collect()
-    return _fold_profiles(rows, specs)
+    (``scan_sketch_agg``) — bypasses the JVM→Arrow bridge for the
+    ``array<int32>`` column. Same result contract: register/linear states
+    byte-identical to the Spark-scan build; MG/KLL guarantee-level (their
+    retained sets are partitioning-dependent)."""
+    spec = ProfileSpec(t, d, p, cs_width, cs_depth, mg_k, kll_k)
+    ex = profile_values(tokens_col, ntok_col)
+    df = scan_sketch_agg(spark, path, spec, ex, by=[by])
+    return _profiles(df.collect(), spec, by)

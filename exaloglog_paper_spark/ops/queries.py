@@ -2209,9 +2209,9 @@ def token_profile_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     inside BOTH the MG bracket and the count-sketch two-sided bound
     (fully sketch-derived), median within 5% rank tolerance.
 
-    Scale shape: map-only pass + KB states per (partition, group) to the
-    driver fold (same contract as tree_merge's driver fold); every exact
-    quantity here is verification-only — the profile itself never
+    Scale shape: map-only pass + KB states per (partition, group) into
+    the bounded-fanin tree merge (ProfileSpec through sketch_agg); every
+    exact quantity here is verification-only — the profile itself never
     shuffles a data-sized relation.
     """
     import numpy as np

@@ -72,13 +72,20 @@ def splits_df(spark: SparkSession, path: str, parallelism: int | None = None) ->
                 -(-total_bytes // _TARGET_SPLIT_BYTES),
             ),
         )
-    # Arrow-backed LocalRelation + round-robin repartition instead of
-    # sc.parallelize: the parallelize RDD carries pickled Python rows whose
-    # scan re-runs a Python deserialization step chained in front of every
-    # downstream mapInArrow task; the LocalRelation ships the split list
-    # (KB) JVM-side once. Round-robin assignment is deterministic
-    # (sortBeforeRepartition) and split->task placement is free to differ:
-    # every consumer is partitioning-invariant by the merge algebra.
+    return split_table(spark, splits, parallelism)
+
+
+def split_table(spark: SparkSession, splits, parallelism: int) -> DataFrame:
+    """The given (path, row_group) splits as a DataFrame of ``parallelism``
+    partitions.
+
+    Arrow-backed LocalRelation + round-robin repartition instead of
+    sc.parallelize: the parallelize RDD carries pickled Python rows whose
+    scan re-runs a Python deserialization step chained in front of every
+    downstream mapInArrow task; the LocalRelation ships the split list
+    (KB) JVM-side once. Round-robin assignment is deterministic
+    (sortBeforeRepartition), so the order-dependent summaries (MG/KLL)
+    see the same split->task assignment on every run."""
     import pandas as pd
 
     pdf = pd.DataFrame(splits, columns=["path", "row_group"])
@@ -98,6 +105,45 @@ def batch_iterator(split_rows, columns: Sequence[str], batch_rows: int = 65536):
         )
 
 
+def split_partials(
+    sdf: DataFrame,
+    first_file: str,
+    spec,
+    extractor,
+    by: Sequence[str],
+    num_partitions: int,
+    batch_rows: int = 65536,
+) -> DataFrame:
+    """Stage A over a split table (:func:`split_table`): each task reads
+    its (path, row_group) splits with pyarrow and builds one partial row
+    per group — the partial rows of ``ops.agg.sketch_partials``, with the
+    by-columns' Spark types taken from ``first_file``'s parquet schema."""
+    import pyarrow.parquet as pq
+
+    from .agg import _build_partials_batches, _by_schema_from_fields
+
+    by = list(by)
+    cols = list(dict.fromkeys(by + list(extractor.input_cols)))
+
+    def run(batches):
+        # gather this task's splits (tiny), then stream its row groups
+        split_rows: list[tuple[str, list[int]]] = []
+        for b in batches:
+            for prow, grow in zip(b.column("path").to_pylist(), b.column("row_group").to_pylist()):
+                split_rows.append((prow, [grow]))
+        yield from _build_partials_batches(
+            batch_iterator(split_rows, cols, batch_rows),
+            spec,
+            extractor,
+            by,
+            num_partitions=num_partitions,
+        )
+
+    file_schema = pq.ParquetFile(first_file).schema_arrow
+    schema = _by_schema_from_fields([file_schema.field(c) for c in by])
+    return sdf.mapInArrow(run, schema=schema)
+
+
 def scan_sketch_agg(
     spark: SparkSession,
     path: str,
@@ -113,36 +159,12 @@ def scan_sketch_agg(
     ``sketch_agg(spark.read.parquet(path), ...)`` — asserted in tests — at a
     fraction of the transfer cost for array columns.
     """
-    import pyarrow as pa
-
-    from .agg import _build_partials_batches, _by_schema_from_fields, tree_merge
+    from .agg import tree_merge
 
     sdf = splits_df(spark, path)
     num_p = sdf.rdd.getNumPartitions()
-    by = list(by)
-    cols = list(dict.fromkeys(by + list(extractor.input_cols)))
-
-    def run(batches):
-        # gather this task's splits (tiny), then stream its row groups
-        split_rows: list[tuple[str, list[int]]] = []
-        for b in batches:
-            for prow, grow in zip(b.column("path").to_pylist(), b.column("row_group").to_pylist()):
-                split_rows.append((prow, [grow]))
-        yield from _build_partials_batches(
-            batch_iterator(split_rows, cols, batch_rows),
-            spec,
-            extractor,
-            by,
-            num_partitions=num_p,
-        )
-
-    # derive the by-columns' Spark types from the parquet schema
-    import pyarrow.parquet as pq
-
     first = list_row_group_splits(path)[0][0]
-    file_schema = pq.ParquetFile(first).schema_arrow
-    schema = _by_schema_from_fields([file_schema.field(c) for c in by])
-    partials = sdf.mapInArrow(run, schema=schema)
+    partials = split_partials(sdf, first, spec, extractor, by, num_p, batch_rows)
     # Grouped aggregations keep the distributed tree unconditionally: a
     # grouped driver-fold fast path (JVM approx_count_distinct probe +
     # collect + numpy fold) was tried in r6 and measured NO faster than

@@ -59,3 +59,16 @@ def test_resume_skips_completed_buckets(spark, tokens_path, tmp_path):
     a = {r.source: bytes(r.sketch) for r in full}
     b = {r.source: bytes(r.sketch) for r in resumed}
     assert a == b
+
+
+def test_checkpointed_rejects_directory_without_parquet(spark, tmp_path):
+    """An empty write leaves a directory holding only ``_SUCCESS``: the
+    checkpointed build raises the engine-standard FileNotFoundError (as
+    splits_df does), not an IndexError from an empty split list."""
+    src = str(tmp_path / "empty_tokens")
+    tok.token_table(spark, 5, num_partitions=2).filter(F.lit(False)).write.parquet(src)
+    with pytest.raises(FileNotFoundError, match="no parquet files under"):
+        checkpointed_sketch_agg(
+            spark, src, ExaLogLogSpec(2, 20, 8), token_array_values("tokens"),
+            ckpt_dir=str(tmp_path / "ck"), num_buckets=2,
+        )

@@ -322,23 +322,19 @@ def test_bloom_probe_is_scan_side_no_shuffle(spark):
 def test_profile_scan_prunes_to_input_columns(spark):
     """The one-pass profiler must read only (source, tokens, n_tok) from
     the parquet scan — doc_id is pruned even though the profiler consumes
-    whole Arrow batches (pinned on the REAL distributed stage via
-    profile_partials_df)."""
+    whole Arrow batches (pinned on the REAL distributed stage: the
+    profile's partials through sketch_partials)."""
     from exaloglog_paper_spark.ops import tokens as tok
-    from exaloglog_paper_spark.ops.agg import ExaLogLogSpec
-    from exaloglog_paper_spark.ops.profile import profile_partials_df
-    from exaloglog_paper_spark.ops.specs import (
-        CountSketchSpec,
-        KLLSpec,
-        MisraGriesSpec,
-    )
+    from exaloglog_paper_spark.ops.agg import sketch_partials
+    from exaloglog_paper_spark.ops.profile import ProfileSpec, profile_values
 
     path = tok.materialize_token_table("sf0.001")
     df = spark.read.parquet(path)
-    partials = profile_partials_df(
+    partials = sketch_partials(
         df,
-        (ExaLogLogSpec(2, 20, 8), CountSketchSpec(512, 3),
-         MisraGriesSpec(32), KLLSpec(100)),
+        ProfileSpec(2, 20, 8, cs_width=512, cs_depth=3, mg_k=32, kll_k=100),
+        profile_values("tokens", "n_tok"),
+        by=["source"],
     )
     plan = _plan(partials)
     scan = plan[plan.index("ReadSchema") :].splitlines()[0]
