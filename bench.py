@@ -30,10 +30,10 @@ from exaloglog_paper_spark.ops.agg import (  # noqa: E402
     with_estimate,
 )
 from exaloglog_paper_spark.ops.source import scan_sketch_agg  # noqa: E402
-from exaloglog_paper_spark.session import get_spark  # noqa: E402
+from exaloglog_paper_spark.session import available_cpus, get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or available_cpus())
 
 
 def calibrate_ns_per_element(n: int = 2_000_000, reps: int = 5) -> float:

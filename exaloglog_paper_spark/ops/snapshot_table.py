@@ -51,6 +51,7 @@ import time
 from typing import Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from .sketch_table import merge_state_tables
 
@@ -156,7 +157,8 @@ def update_snapshot_table(
     merged.write.mode("overwrite").parquet(os.path.join(table_dir, rel_data))
 
     out = spark.read.parquet(os.path.join(table_dir, rel_data))
-    agg = out.groupBy().sum("n_values").collect()  # KB-scale state table
+    # one job over the KB-scale state table for both summary figures
+    n_groups, total_values = out.agg(F.count(F.lit(1)), F.sum("n_values")).first()
     snaps.append(
         {
             "id": snap_id,
@@ -165,8 +167,8 @@ def update_snapshot_table(
             "operation": operation,
             "manifest": [rel_data],
             "summary": {
-                "n_groups": out.count(),
-                "total_values": int(agg[0][0] or 0),
+                "n_groups": n_groups,
+                "total_values": int(total_values or 0),
                 "commit_secs": round(time.monotonic() - t0, 3),
             },
             "lineage": dict(lineage or {}),

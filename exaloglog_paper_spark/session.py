@@ -14,6 +14,15 @@ import os
 from pyspark.sql import SparkSession
 
 
+def available_cpus() -> int:
+    """CPUs this process may run on (its affinity mask, not the host's)."""
+    return len(os.sched_getaffinity(0))
+
+
+def _physical_memory_mb() -> int:
+    return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+
+
 def get_spark(
     app_name: str = "exaloglog-paper-spark",
     master: str | None = None,
@@ -23,12 +32,17 @@ def get_spark(
     """``scheduler_mode="FAIR"`` lets concurrent jobs submitted from
     multiple driver threads share executor slots round-robin (per-thread
     pools) instead of FIFO head-of-line blocking — used by the error-sim
-    grid's --jobs fan-out. Only honored at session creation."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    grid's --jobs fan-out. Only honored at session creation.
+
+    Unset SPARK_GRAFT_CPUS / SPARK_DRIVER_MEM default to the process's CPU
+    count and half of physical memory (local mode: the driver JVM hosts
+    the executors); maxResultSize is an eighth of physical memory."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(available_cpus())
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
-        n = cpus if cpus.isdigit() else "32"
-        shuffle_partitions = max(int(n), 8)
+        n = int(cpus) if cpus.isdigit() else available_cpus()
+        shuffle_partitions = max(n, 8)
+    mem_mb = _physical_memory_mb()
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -37,8 +51,11 @@ def get_spark(
             scheduler_mode
             or os.environ.get("SPARK_GRAFT_SCHEDULER", "FIFO"),
         )
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
-        .config("spark.driver.maxResultSize", "4g")
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM", f"{mem_mb // 2}m"),
+        )
+        .config("spark.driver.maxResultSize", f"{max(1024, mem_mb // 8)}m")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -102,6 +102,12 @@ def test_dedup_plans_have_partial_aggregation(spark):
     assert "partial_" in plan, plan
     plan = _plan(Q.dedup_exact_summary(spark, SF_DIR))
     assert "partial_" in plan, plan
+    # the wiring pin: the query's candidates really are built from this
+    # subplan (source-level, survives the checkpoint boundary)
+    import inspect
+
+    src = inspect.getsource(Q.minhash_lsh_candidates)
+    assert "lsh_candidate_pairs(sigs)" in src and "sigs = minhash_signatures(" in src
 
 
 def test_jaccard_wordset_agg_is_candidate_pruned(spark):
@@ -112,14 +118,25 @@ def test_jaccard_wordset_agg_is_candidate_pruned(spark):
     r6: the verification stage eagerly checkpoints its intermediates (plan
     truncation), which hides this subplan from the final explain — so the
     pin targets the named helper jaccard_verified_pairs routes through."""
+    from pyspark.sql import functions as F
+
     from exaloglog_paper_spark.ops import dedup
 
     words = Q._words(spark, SF_DIR)
-    cand_ids = words.sparkSession.range(50).selectExpr("id AS doc_id")
+    # cand_ids built as jaccard_verified_pairs builds them: union+distinct
+    # over the checkpointed LSH candidates, whose size estimate (a self-join
+    # of the band table) is far above the broadcast threshold — so only the
+    # explicit F.broadcast keeps this prune a broadcast
+    candidates = Q.minhash_lsh_candidates(spark, SF_DIR).localCheckpoint(eager=True)
+    cand_ids = (
+        candidates.select(F.col("id_a").alias("doc_id"))
+        .unionByName(candidates.select(F.col("id_b").alias("doc_id")))
+        .distinct()
+    )
     plan = _plan(dedup._candidate_word_sets(words, cand_ids, "doc_id", "word"))
     assert "LeftSemi" in plan, plan
     # and the prune is a broadcast, not a full shuffle of the word table
-    assert "BroadcastHashJoin" in plan and "LeftSemi" in plan, plan
+    assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan, plan
     # the wiring pin: jaccard_verified_pairs' ws really is this helper's
     # output (source-level, cheap, survives the checkpoint boundary)
     import inspect
